@@ -55,7 +55,7 @@ from dedup_spark.operators.components import (
 )
 from dedup_spark.operators.embeddings import ann_verified_pairs, cosine_scores_gemm
 from dedup_spark.operators.exact import duplicate_stats, exact_duplicate_clusters
-from dedup_spark.operators.minhash import minhash_near_duplicates
+from dedup_spark.operators.minhash import SHINGLE_K, minhash_near_duplicates
 from dedup_spark.operators.simhash import phash_near_duplicates, simhash_text_udf
 from dedup_spark.operators.suffix import (
     char_substring_pairs,
@@ -68,7 +68,7 @@ from dedup_spark.sources.filters import apply_scan_filters
 # shared helpers
 # ---------------------------------------------------------------------------
 
-K = DEFAULT_CONFIG.shingle_k  # 3-word shingles, pinned with the parity tests
+K = SHINGLE_K  # 3-word shingles, pinned with the parity tests
 JACCARD_T = DEFAULT_CONFIG.jaccard_threshold  # 0.7
 # LSH-verified tier is oracle-compared at a BAND-SAFE threshold: at the
 # pinned 16 bands × 4 rows a pair at j=0.9 is missed by every band with
@@ -245,11 +245,15 @@ def _oracle_minhash_lsh_cte() -> str:
 
     Ends with CTE ``lsh(id1, id2, jaccard)`` = verified pairs at the
     production threshold, plus ``c(doc_id, n)`` shingle-set sizes."""
-    from dedup_spark.operators.minhash import _perm_params, shingle_multipliers
+    from dedup_spark.operators.minhash import (
+        MINHASH_ROWS as rows,
+        MINHASH_SEED,
+        NUM_PERM as num_perm,
+        _perm_params,
+        shingle_multipliers,
+    )
 
-    cfg = DEFAULT_CONFIG
-    num_perm, rows = cfg.num_perm, cfg.minhash_rows
-    a, b = _perm_params(num_perm, cfg.minhash_seed)
+    a, b = _perm_params(num_perm, MINHASH_SEED)
     perm_values = ", ".join(
         f"({p}, {int(a[p])}::UBIGINT, {int(b[p])}::UBIGINT)"
         for p in range(num_perm)

@@ -40,6 +40,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 from dedup_spark.plans.lineage import StageMetrics
 
+# large-star/small-star converges in O(log n) iterations; the cap only
+# stops a loop that would never converge
+CC_MAX_ITERATIONS = 50
+
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
     """Normalize to src < dst, drop self-loops and duplicates."""
@@ -143,7 +147,7 @@ def connected_components(
         return (row["n"], str(row["h1"]), str(row["h2"]))
 
     prev = _sig(e)
-    for it in range(start_iter, cfg.cc_max_iterations):
+    for it in range(start_iter, CC_MAX_ITERATIONS):
         with metrics.stage(f"iter_{it}"):
             e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
             cur = _sig(e2)
@@ -159,7 +163,7 @@ def connected_components(
                 break
     else:
         raise RuntimeError(
-            f"connected components did not converge in {cfg.cc_max_iterations} iterations"
+            f"connected components did not converge in {CC_MAX_ITERATIONS} iterations"
         )
 
     # at convergence every dst points at its component min (src)

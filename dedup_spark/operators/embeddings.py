@@ -37,6 +37,9 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 
+# seed of the random-gaussian hyperplanes (hyperplane_signature_udf)
+HYPERPLANE_SEED = 42
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -255,7 +258,7 @@ def hyperplane_signature_udf(dim: int, cfg: DedupConfig = DEFAULT_CONFIG):
     """pandas UDF: embedding → array<long> of `ann_tables` packed sign
     signatures over SEEDED RANDOM gaussian hyperplanes. One matrix
     multiply per Arrow batch — fully vectorized."""
-    rng = np.random.default_rng(cfg.minhash_seed)
+    rng = np.random.default_rng(HYPERPLANE_SEED)
     planes = rng.standard_normal((cfg.ann_tables, cfg.ann_hyperplanes, dim)).astype(
         np.float32
     )

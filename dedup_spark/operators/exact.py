@@ -22,9 +22,8 @@ Scale design notes
   The payload column never crosses a shuffle boundary.
 * **All aggregations are partial-aggregatable** (count / min / sum), so a
   pathological million-row duplicate cluster combines map-side; no
-  salting needed on this path. ``collect_list`` of members is only in the
-  small-scale report helper, never the scale path — cluster membership is
-  a (id, cluster_id) assignment table instead.
+  salting needed on this path. No member array is ever collected —
+  cluster membership is a (id, cluster_id) assignment table.
 * Null/unreadable payloads are dropped silently, mirroring the
   reference's filter_map skip (src/hasher.rs:57-60).
 """
@@ -33,7 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
+# reference: 8 KiB partial-hash window (src/hasher.rs:18-27)
+PREFIX_BYTES = 8192
 
 
 def size_candidates(
@@ -101,7 +101,6 @@ def exact_duplicate_clusters(
     id_col: str = "image_id",
     payload_col: str = "bytes",
     extra_keys: tuple[str, ...] = ("phash", "w", "h", "fmt"),
-    cfg: DedupConfig = DEFAULT_CONFIG,
     fuse_full_hash: bool = True,
 ) -> DataFrame:
     """Full cascade → assignment table ``(id, cluster_id, size, n_members)``.
@@ -142,13 +141,13 @@ def exact_duplicate_clusters(
     is safe either way: NULL keys group and survive null-safely.
     """
     payload = F.col(payload_col)
+    # empty payloads never group (reference src/scanner.rs:96-99); the
+    # size band and globs are the scan's job (sources.filters)
     base = (
         df.filter(payload.isNotNull())
-        .filter(F.length(payload) >= cfg.min_size)
+        .filter(F.length(payload) > 0)
+        .withColumn("_len", F.length(payload))
     )
-    if cfg.max_size is not None:
-        base = base.filter(F.length(payload) <= cfg.max_size)
-    base = base.withColumn("_len", F.length(payload))
 
     # stage 1 key: metadata columns when available (phash/w/h/fmt are
     # necessary conditions for byte equality and live in their own
@@ -176,7 +175,7 @@ def exact_duplicate_clusters(
     # *a* collision-resistant hash, not BLAKE3 specifically — see
     # SURVEY.md §1.3)
     prefix = F.sha2(
-        F.substring(F.col(payload_col).cast("binary"), 1, cfg.prefix_bytes), 256
+        F.substring(F.col(payload_col).cast("binary"), 1, PREFIX_BYTES), 256
     )
     full = F.sha2(F.col(payload_col).cast("binary"), 256)
     keys2 = [*keys1, "_psha"]

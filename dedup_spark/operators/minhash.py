@@ -44,6 +44,14 @@ from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 _MERSENNE = np.uint64((1 << 61) - 1)
 _MAX_HASH = np.uint64((1 << 61) - 1)
 
+# The signature config is pinned for every caller (engine, parity tests,
+# DuckDB oracle): recall is only meaningful at a fixed config.
+SHINGLE_K = 3        # word n-gram size
+MINHASH_BANDS = 16
+MINHASH_ROWS = 4
+NUM_PERM = MINHASH_BANDS * MINHASH_ROWS  # 64
+MINHASH_SEED = 42
+
 
 def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     rng = np.random.default_rng(seed)
@@ -186,9 +194,9 @@ def _batch_shingles(texts, k: int):
     return acc, offsets, nulls_arr
 
 
-def minhash_signature_udf(cfg: DedupConfig = DEFAULT_CONFIG):
+def minhash_signature_udf():
     """pandas UDF: text column → array<bigint> of band hashes (length =
-    cfg.minhash_bands). Band hash = xxhash-style mix of the band's `rows`
+    MINHASH_BANDS). Band hash = xxhash-style mix of the band's `rows`
     min-hash slots, so banding happens inside the UDF and only
     bands × 8 bytes per row cross into the JVM.
 
@@ -196,8 +204,8 @@ def minhash_signature_udf(cfg: DedupConfig = DEFAULT_CONFIG):
     (num_perm × total_shingles) universal-hash matrix is built once,
     and per-doc minima come from np.minimum.reduceat segment
     reduction — one numpy pipeline per Arrow batch, no per-doc loop."""
-    a, b = _perm_params(cfg.num_perm, cfg.minhash_seed)
-    bands, rows, k = cfg.minhash_bands, cfg.minhash_rows, cfg.shingle_k
+    a, b = _perm_params(NUM_PERM, MINHASH_SEED)
+    bands, rows, k = MINHASH_BANDS, MINHASH_ROWS, SHINGLE_K
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _sig(texts: pd.Series) -> pd.Series:
@@ -205,7 +213,7 @@ def minhash_signature_udf(cfg: DedupConfig = DEFAULT_CONFIG):
         n_docs = len(nulls)
         if concat.size == 0:
             return pd.Series([None] * n_docs)
-        sigs = np.empty((cfg.num_perm, n_docs), dtype=np.uint64)
+        sigs = np.empty((NUM_PERM, n_docs), dtype=np.uint64)
         starts = offsets[:-1]
         valid = ~nulls
         seg_starts = starts[valid]
@@ -216,11 +224,11 @@ def minhash_signature_udf(cfg: DedupConfig = DEFAULT_CONFIG):
         # = (x & M) + (x >> 61), minus M if >= M — bit-identical to
         # `%` (the DuckDB oracle recomputes `%` directly), measured
         # ~9x faster with chunk=16 (bounded temporaries, cache-sized).
-        ch_n = min(16, cfg.num_perm)
+        ch_n = min(16, NUM_PERM)
         buf = np.empty((ch_n, concat.size), dtype=np.uint64)
         low = np.empty_like(buf)
-        for lo in range(0, cfg.num_perm, ch_n):
-            hi = min(lo + ch_n, cfg.num_perm)
+        for lo in range(0, NUM_PERM, ch_n):
+            hi = min(lo + ch_n, NUM_PERM)
             n = hi - lo
             np.multiply(a[lo:hi, None], concat[None, :], out=buf[:n])
             buf[:n] += b[lo:hi, None]
@@ -247,10 +255,10 @@ def minhash_signature_udf(cfg: DedupConfig = DEFAULT_CONFIG):
     return _sig
 
 
-def shingle_explode_udf(cfg: DedupConfig = DEFAULT_CONFIG):
+def shingle_explode_udf():
     """pandas UDF: text → array<bigint> of distinct shingle hashes
     (used by the exact-Jaccard verification join)."""
-    k = cfg.shingle_k
+    k = SHINGLE_K
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _sh(texts: pd.Series) -> pd.Series:
@@ -272,7 +280,6 @@ def band_candidates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    cfg: DedupConfig = DEFAULT_CONFIG,
     max_band_bucket: int = 64,
 ) -> DataFrame:
     """LSH candidate pairs (id1 < id2), deduped across bands.
@@ -282,7 +289,7 @@ def band_candidates(
     """
     from dedup_spark.operators.banding import star_guarded_pairs
 
-    sig = minhash_signature_udf(cfg)
+    sig = minhash_signature_udf()
     banded = (
         df.select(F.col(id_col).alias("_id"), sig(F.col(text_col)).alias("_bands"))
         .filter(F.col("_bands").isNotNull())
@@ -302,7 +309,7 @@ def jaccard_verify(
     cfg.jaccard_threshold. Shingle sets are recomputed only for rows that
     appear in some pair (left_semi prune), then set-intersected via
     built-in array functions — no Python in the join itself."""
-    sh = shingle_explode_udf(cfg)
+    sh = shingle_explode_udf()
     ids = pairs.select(F.col("id1").alias("_id")).unionByName(
         pairs.select(F.col("id2").alias("_id"))
     ).distinct()
@@ -342,5 +349,5 @@ def minhash_near_duplicates(
     large headroom value so a duplicate flood cannot degrade the
     verified output to a subset of the exact pair set; pipeline callers
     keep the flood-safe default (cluster-level recall via CC)."""
-    pairs = band_candidates(df, id_col, text_col, cfg, max_band_bucket)
+    pairs = band_candidates(df, id_col, text_col, max_band_bucket)
     return jaccard_verify(df, pairs, id_col, text_col, cfg)

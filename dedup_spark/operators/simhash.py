@@ -68,9 +68,7 @@ def hamming_candidates(
         df.select(
             F.col(id_col).alias("_id"),
             F.col(hash_col).alias("_h"),
-            F.explode(F.array(*_band_exprs(hash_col, cfg.hamming_radius, cfg.simhash_bits))).alias(
-                "b"
-            ),
+            F.explode(F.array(*_band_exprs(hash_col, cfg.hamming_radius))).alias("b"),
         )
         .select("_id", "_h", "b.band_idx", "b.band_bits")
     )

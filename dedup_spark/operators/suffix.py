@@ -92,7 +92,6 @@ def containment_pairs(
     df: DataFrame,
     id_col: str = "image_id",
     text_col: str = "caption",
-    cfg: DedupConfig = DEFAULT_CONFIG,
     threshold: float = 1.0,
     max_posting: int | None = 512,
     log_drops: bool = True,
@@ -105,7 +104,7 @@ def containment_pairs(
     standard IDF cutoff); at 100 TB this is the difference between a
     sparse join and a quadratic blowup. The cap is ON by default.
     """
-    sh = shingle_explode_udf(cfg)
+    sh = shingle_explode_udf()
     # lazy checkpoint: the shingle UDF pass feeds THREE consumers
     # (sizes, the posting counts, the pair self-join) — without it the
     # UDF re-executes per consumer, which was the round-2 cpu
@@ -171,7 +170,7 @@ def exact_jaccard_pairs(
         base = base.filter(
             F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")) >= min_tokens
         )
-    sh = shingle_explode_udf(cfg)
+    sh = shingle_explode_udf()
     # one UDF pass for all consumers — see containment_pairs
     shingled = (
         base.select(F.col(id_col).alias("_id"), sh(F.col(text_col)).alias("_sh"))

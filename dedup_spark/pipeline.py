@@ -61,7 +61,7 @@ def dedup_pipeline(
             c for c in (phash_col, "w", "h", "fmt") if c and c in df.columns
         )
         exact = exact_duplicate_clusters(
-            df, id_col=id_col, payload_col=payload_col, extra_keys=extra, cfg=cfg
+            df, id_col=id_col, payload_col=payload_col, extra_keys=extra
         )
         edge_parts.append(
             exact.select(

@@ -24,12 +24,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
 def iceberg_available(spark: SparkSession) -> bool:
     try:
         spark._jvm.java.lang.Class.forName(  # noqa: SLF001
@@ -38,20 +32,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one catalog table. Iceberg identifier or parquet path."""
-    if "://" in sf_dir or sf_dir.startswith("catalog."):
-        return spark.read.format("iceberg").load(f"{sf_dir}.{name}")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    for name in names or TABLES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            spark.read.parquet(p).createOrReplaceTempView(name)
 
 
 def write_bucketed(

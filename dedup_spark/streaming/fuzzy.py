@@ -104,7 +104,7 @@ def fuzzy_process_batch(
         .localCheckpoint(eager=True)
     )
 
-    sig = minhash_signature_udf(cfg)
+    sig = minhash_signature_udf()
     banded_new = (
         new_docs.select("doc_id", sig(F.col("text")).alias("_bands"))
         .filter(F.col("_bands").isNotNull())

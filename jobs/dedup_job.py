@@ -16,8 +16,15 @@ Option surface mapped from the reference:
   --include/--exclude [+ @file]      (src/main.rs:52-68, S7 pattern files)
   --jobs                -> spark conf (local[N]); on a real cluster
         parallelism comes from spark-submit, not this flag
-  --tiers exact,caption,phash        (which edge producers run)
-  --checkpoint-dir      -> resumable CC state (north rule)
+  --tiers exact,caption,phash        (which edge producers run; exact
+        always runs and must be listed)
+  --checkpoint-dir      -> resumable CC state (north rule), the only
+        DedupConfig value the job sets
+
+The size band and globs are applied once, at the scan
+(sources.filters.apply_scan_filters); the pipeline never re-filters.
+Bad input (an unknown tier, --action write without --output) is an
+argparse error, exit code 2, before any Spark work.
 
 Packaging: `cd /root/repo && zip -r dedup_spark.zip dedup_spark` then
 pass via --py-files; this file only imports from the package.
@@ -27,7 +34,20 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
+
+TIERS = ("exact", "caption", "phash")
+
+
+def _tiers(value: str) -> frozenset[str]:
+    tiers = frozenset(value.split(","))
+    unknown = sorted(tiers - set(TIERS))
+    if unknown:
+        raise argparse.ArgumentTypeError(
+            f"unknown tier(s) {', '.join(unknown)}; choose from {', '.join(TIERS)}"
+        )
+    if "exact" not in tiers:
+        raise argparse.ArgumentTypeError("the exact tier always runs; list it")
+    return tiers
 
 
 def parse_args(argv=None):
@@ -44,7 +64,7 @@ def parse_args(argv=None):
     p.add_argument("--exclude", action="append", default=[])
     p.add_argument("--include-file", default=None)
     p.add_argument("--exclude-file", default=None)
-    p.add_argument("--tiers", default="exact,caption,phash")
+    p.add_argument("--tiers", type=_tiers, default=",".join(TIERS))
     p.add_argument("--id-col", default="image_id")
     p.add_argument("--payload-col", default="bytes")
     p.add_argument("--caption-col", default="caption")
@@ -52,7 +72,10 @@ def parse_args(argv=None):
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--jobs", type=int, default=None, help="local-mode cores (cluster: use spark-submit)")
     p.add_argument("--metrics-out", default=None)
-    return p.parse_args(argv)
+    args = p.parse_args(argv)
+    if args.action == "write" and not args.output:
+        p.error("--output is required for --action write")
+    return args
 
 
 def main(argv=None) -> int:
@@ -64,7 +87,7 @@ def main(argv=None) -> int:
     from dedup_spark.operators.canonical import merge_assignments
     from dedup_spark.pipeline import dedup_pipeline
     from dedup_spark.plans.lineage import StageMetrics
-    from dedup_spark.sources.catalog import load_table, write_table
+    from dedup_spark.sources.catalog import read_table, write_table
     from dedup_spark.sources.filters import apply_scan_filters, parse_pattern_file
 
     if args.jobs:
@@ -96,19 +119,14 @@ def main(argv=None) -> int:
         exclude=exclude,
     )
 
-    tiers = set(args.tiers.split(","))
-    cfg = DedupConfig(
-        min_size=args.min_size,
-        max_size=args.max_size,
-        checkpoint_dir=args.checkpoint_dir,
-    )
+    cfg = DedupConfig(checkpoint_dir=args.checkpoint_dir)
     metrics = StageMetrics("dedup_job")
     assigned = dedup_pipeline(
         df,
         id_col=args.id_col,
         payload_col=args.payload_col,
-        caption_col=args.caption_col if "caption" in tiers else None,
-        phash_col=args.phash_col if "phash" in tiers else None,
+        caption_col=args.caption_col if "caption" in args.tiers else None,
+        phash_col=args.phash_col if "phash" in args.tiers else None,
         cfg=cfg,
         metrics=metrics,
         include_singletons=False,
@@ -123,16 +141,10 @@ def main(argv=None) -> int:
     n_groups = stats["groups"]
 
     if args.action == "write":
-        if not args.output:
-            print("--output required for --action write", file=sys.stderr)
-            return 2
         if args.dry_run:
             print(f"[dry-run] would write {assigned.count()} assignments to {args.output}")
         else:
-            existing = None
             try:
-                from dedup_spark.sources.catalog import read_table
-
                 existing = read_table(spark, args.output)
             except Exception:
                 existing = None
@@ -152,7 +164,7 @@ def main(argv=None) -> int:
         print(f"rows in clusters:   {stats['rows_in_groups']}")
         if args.verbose:
             for r in assigned.limit(50).collect():
-                print(f"  {r['image_id']} -> {r['cluster_id']}"
+                print(f"  {r[args.id_col]} -> {r['cluster_id']}"
                       + (" [canonical]" if r["is_canonical"] else ""))
 
     if args.action == "report-exit-code":

@@ -8,7 +8,6 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from dedup_spark.config import DedupConfig
 from dedup_spark.fixtures.images import (
     IMAGES_SCHEMA,
     encode_ppm,
@@ -18,7 +17,6 @@ from dedup_spark.fixtures.images import (
 )
 from dedup_spark.operators.canonical import action_summary, merge_assignments, with_canonical
 from dedup_spark.operators.exact import duplicate_stats, exact_duplicate_clusters
-from dedup_spark.operators.report import format_human, has_duplicates, to_json_report
 from dedup_spark.sources.filters import apply_scan_filters
 
 
@@ -64,7 +62,6 @@ def test_all_unique(spark):
     df = _df(spark, [_row("a/1", _pixels(1)), _row("a/2", _pixels(2))])
     asg = exact_duplicate_clusters(df)
     assert asg.count() == 0
-    assert not has_duplicates(asg)
     stats = duplicate_stats(asg).first()
     assert stats["duplicate_groups"] == 0
     assert stats["wasted_bytes"] == 0
@@ -175,23 +172,6 @@ def test_canonical_shortest_id_and_idempotent_merge(spark):
     # idempotent re-run: merging identical assignments adds zero rows
     merged = merge_assignments(marked, existing=marked)
     assert merged.count() == marked.count()
-
-
-def test_json_report_contract(spark):
-    # tests/output_format.rs:42-99 — JSON schema fields
-    px = _pixels(14)
-    df = _df(spark, [_row("a/1", px), _row("a/2", px), _row("u/1", _pixels(15))])
-    asg = exact_duplicate_clusters(df)
-    report = to_json_report(asg, total_rows=df.count())
-    assert report["stats"] == {
-        "total_files": 3,
-        "duplicate_files": 2,
-        "wasted_bytes": len(encode_ppm(px)),
-    }
-    assert report["groups"] == [
-        {"size": len(encode_ppm(px)), "files": ["a/1", "a/2"]}
-    ]
-    assert "total rows" in format_human(report)
 
 
 def test_generated_corpus_full_recall(spark):

@@ -1,7 +1,8 @@
 """Near-duplicate tier tests: MinHash/LSH recall (the north-rule
 >=0.99 metric), SimHash Hamming guarantees, shingle containment,
-substring scan. Config pinned to DEFAULT_CONFIG (shingle_k=3,
-16 bands x 4 rows) — recall is only meaningful at a fixed config."""
+substring scan. Signature config pinned in operators/minhash.py
+(SHINGLE_K=3, 16 bands x 4 rows) — recall is only meaningful at a fixed
+config."""
 
 from __future__ import annotations
 

@@ -412,7 +412,7 @@ def test_fuzzy_bucketed_band_state_and_compaction(spark, tmp_path):
         )
         from dedup_spark.operators.minhash import minhash_signature_udf
 
-        sig = minhash_signature_udf(cfg)
+        sig = minhash_signature_udf()
         banded_new = probe.select(
             "doc_id", sig(F.col("text")).alias("_bands")
         ).select(

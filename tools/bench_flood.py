@@ -77,7 +77,7 @@ def star_guard_audit(spark, path: str) -> dict:
 
     df = spark.read.parquet(path)
     out = {}
-    sig = minhash_signature_udf(cfg)
+    sig = minhash_signature_udf()
     caption_banded = (
         df.select(sig(F.col("caption")).alias("_bands"))
         .filter(F.col("_bands").isNotNull())
@@ -85,7 +85,7 @@ def star_guard_audit(spark, path: str) -> dict:
     )
     phash_banded = df.select(
         F.explode(
-            F.array(*_band_exprs("phash", cfg.hamming_radius, cfg.simhash_bits))
+            F.array(*_band_exprs("phash", cfg.hamming_radius))
         ).alias("b")
     ).select("b.band_idx", "b.band_bits")
     for tier, banded, cols, cap in (

@@ -44,6 +44,48 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def compare_query(spark, con, sf_dir: str, name: str, fn, oracle: str | None) -> dict:
+    """Run query ``fn`` on Spark and its ``oracle`` SQL on DuckDB and
+    compare them.
+
+    Returns ``{"match", "rows", "secs", "msg"}``: ``match`` is None for a
+    query without an oracle (rows only), ``msg`` the one-line verdict."""
+    t0 = time.time()
+    try:
+        sdf = fn(spark, sf_dir).toPandas()
+    except Exception as e:  # noqa: BLE001
+        return {"match": False, "err": str(e)[:300],
+                "msg": f"FAIL  {name}: spark error: {e}"}
+    el = time.time() - t0
+    rec = {"rows": len(sdf), "secs": round(el, 1)}
+    if oracle is None:
+        return {"match": None, **rec,
+                "msg": f"ok    {name}: rows-only ({len(sdf)} rows, {el:.1f}s)"}
+    s, o = norm(sdf), norm(con.execute(oracle).df())
+    if list(s.columns) != list(o.columns):
+        msg = f"FAIL  {name}: columns {list(s.columns)} vs {list(o.columns)}"
+    elif len(s) != len(o):
+        msg = f"FAIL  {name}: rows {len(s)} vs {len(o)}"
+    elif not s.equals(o):
+        neq = (s != o).any(axis=1)
+        msg = (f"FAIL  {name}: {int(neq.sum())}/{len(s)} rows differ\n"
+               f"{pd.concat([s[neq].head(3), o[neq].head(3)])}")
+    else:
+        return {"match": True, **rec,
+                "msg": f"ok    {name}: MATCH ({len(s)} rows, {el:.1f}s)"}
+    return {"match": False, **rec, "msg": msg}
+
+
 def main() -> int:
     argv = sys.argv[1:]
     json_out = None
@@ -52,51 +94,19 @@ def main() -> int:
         argv = argv[2:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
-    spark = get_spark("oracle_check", cores=8, shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    spark = get_spark("oracle_check", cores=8)
+    con = oracle_connection(sf_dir)
+    oracles = entrymod.oracle_sql()
     failed = []
     record: dict[str, dict] = {}
-    for name, fn in qs.items():
+    for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {e}")
+        rec = compare_query(spark, con, sf_dir, name, fn, oracles.get(name))
+        print(rec.pop("msg"))
+        if rec["match"] is False:
             failed.append(name)
-            record[name] = {"match": False, "err": str(e)[:300]}
-            continue
-        el = time.time() - t0
-        if name not in oracles:
-            print(f"ok    {name}: rows-only ({len(sdf)} rows, {el:.1f}s)")
-            record[name] = {"match": None, "rows": len(sdf), "secs": round(el, 1)}
-            continue
-        odf = con.execute(oracles[name]).df()
-        s, o = norm(sdf), norm(odf)
-        if list(s.columns) != list(o.columns):
-            print(f"FAIL  {name}: columns {list(s.columns)} vs {list(o.columns)}")
-            failed.append(name)
-        elif len(s) != len(o):
-            print(f"FAIL  {name}: rows {len(s)} vs {len(o)}")
-            failed.append(name)
-        elif not s.equals(o):
-            neq = (s != o).any(axis=1)
-            print(f"FAIL  {name}: {int(neq.sum())}/{len(s)} rows differ")
-            print(pd.concat([s[neq].head(3), o[neq].head(3)]))
-            failed.append(name)
-        else:
-            print(f"ok    {name}: MATCH ({len(s)} rows, {el:.1f}s)")
-        record[name] = {
-            "match": name not in failed,
-            "rows": len(s),
-            "secs": round(el, 1),
-        }
+        record[name] = rec
     print("failed:", failed or "none")
     if json_out:
         import json as _json

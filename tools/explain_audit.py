@@ -121,7 +121,7 @@ def main() -> None:
     # without codegen markers until executed; the static plan shows the
     # same pruning/broadcast/codegen properties we're checking.
     spark = get_spark(
-        "plan_audit", cores=8, shuffle_partitions=8,
+        "plan_audit", cores=8,
         extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
     import __spark_entry__ as e
@@ -316,7 +316,6 @@ def main() -> None:
     # fuzzy tier's band-state join: same contract — the O(corpus x
     # bands) LSH index table scans bucketed, only the micro-batch side
     # exchanges (streaming/fuzzy.py bands_table mode)
-    from dedup_spark.config import DedupConfig
     from dedup_spark.operators.minhash import minhash_signature_udf
 
     spark.sql("DROP TABLE IF EXISTS plan_audit_bands")
@@ -330,7 +329,7 @@ def main() -> None:
         .sortBy("band_idx", "band_hash").format("parquet")
         .saveAsTable("plan_audit_bands")
     )
-    sig = minhash_signature_udf(DedupConfig())
+    sig = minhash_signature_udf()
     banded_new = (
         spark.createDataFrame(
             pd.DataFrame({"doc_id": [9], "text": ["a b c d e f g h i j"]})
