@@ -252,7 +252,12 @@ def minhash_signature_udf():
             [None if nulls[i] else out_arr[i].tolist() for i in range(n_docs)]
         )
 
-    return _sig
+    # Nondeterministic so the optimizer cannot copy the call: callers
+    # posexplode the result, InferFiltersFromGenerate adds isnotnull/
+    # size filters on it, and predicate pushdown would substitute a
+    # deterministic UDF into them — a second ArrowEvalPython node that
+    # signs every row again.
+    return _sig.asNondeterministic()
 
 
 def shingle_explode_udf():

@@ -53,6 +53,13 @@ def get_spark(
         # stages. 4 MB pages keep allocation proportional to data and
         # cost nothing at scale (maps grow by adding pages).
         .config("spark.buffer.pageSize", "4m")
+        # The generated-class cache defaults to 100 entries, but one
+        # dedup_pipeline call needs ~220-240 distinct classes and one
+        # dedup_job call 164: at the default every warm call recompiles
+        # all of them in Janino and re-runs the C2 JIT on the result.
+        # 1000 holds both working sets in one session (164 + ~240)
+        # with about 2x headroom.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Checkpointed/cached RDD partitions carry locality preferences;
         # waiting 3s (default) per wave for NODE_LOCAL slots stalls tiny
         # stages. Schedule immediately — at our task sizes a remote fetch

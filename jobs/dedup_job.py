@@ -2,9 +2,16 @@
 """spark-submit entry point — the reference CLI (src/main.rs:15-70)
 re-expressed for a cluster job.
 
-    spark-submit --py-files dedup_spark.zip jobs/dedup_job.py \
+    spark-submit --py-files dedup_spark.zip \
+        --conf spark.sql.codegen.cache.maxEntries=1000 \
+        jobs/dedup_job.py \
         --input /data/images_table --output /data/assignments \
         --min-size 1 --exclude '*.tmp' --action write --format json
+
+The --conf matters because a spark-submit session is not built by
+dedup_spark.session.get_spark: Spark's default 100-entry codegen
+cache is smaller than this job's ~164 generated classes, so without
+it every query recompiles (get_spark sets the same value for --jobs).
 
 Option surface mapped from the reference:
   path                  -> --input (parquet dir or Iceberg identifier)

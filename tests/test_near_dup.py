@@ -89,6 +89,31 @@ def test_lsh_band_bucket_star_guard(spark):
     assert cc.select("cluster_id").distinct().count() == 1
 
 
+def test_band_signature_udf_evaluated_once(spark, monkeypatch):
+    """The banded frame must sign each row once. Generate's inferred
+    isnotnull/size filter must not get a second copy of the signature
+    UDF pushed below it (two ArrowEvalPython nodes = every row signed
+    twice)."""
+    from dedup_spark.operators import banding
+
+    seen = []
+    real = banding.star_guarded_pairs
+
+    def capture(banded, *args, **kwargs):
+        seen.append(banded)
+        return real(banded, *args, **kwargs)
+
+    monkeypatch.setattr(banding, "star_guarded_pairs", capture)
+    df = _caption_df(
+        spark,
+        [("a", "one two three four five six"), ("b", "one two three four five six")],
+    )
+    assert band_candidates(df, "image_id", "caption").count() == 1
+    (banded,) = seen
+    plan = banded._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_hamming_radius_guarantee(spark):
     """Pigeonhole banding: every pair within radius MUST be found;
     pairs beyond radius MUST be rejected by the verify stage."""

@@ -46,6 +46,10 @@ CHECKS = {
     # row-at-a-time pickled python
     "arrow_vectorized": lambda p: "ArrowEvalPython" in p
     and "BatchEvalPython" not in p,
+    # each Python UDF runs in one ArrowEvalPython node: the optimizer
+    # can copy a deterministic UDF into an inferred filter (e.g. the
+    # isnotnull/size filter under a posexplode), evaluating it twice
+    "python_udf_once": lambda p: not _udf_in_two_nodes(p),
     # bucketed-state join: exactly one Exchange (the micro-batch side);
     # the unbounded state side scans its buckets shuffle-free. Count
     # numbered nodes of the FORMATTED plan only (plan_of appends the
@@ -98,6 +102,22 @@ def _attr_in_exchange(plan: str, attr: str) -> bool:
         if attr in m.group(0):
             return True
     return False
+
+
+def _udf_in_two_nodes(plan: str) -> bool:
+    """True iff some UDF name is called by more than one numbered
+    ArrowEvalPython node of the formatted plan. A UDF call prints as
+    `name(args)#exprId`; nested built-ins inside args carry no #id."""
+    nodes = re.findall(
+        r"^\(\d+\) ArrowEvalPython\nInput[^\n]*\nArguments: ([^\n]*)",
+        plan, re.M,
+    )
+    names = [
+        n
+        for args in nodes
+        for n in set(re.findall(r"(\w+)\((?:[^()]|\([^()]*\))*\)#\d+", args))
+    ]
+    return len(names) != len(set(names))
 
 
 def _payload_in_exchange(plan: str) -> bool:
@@ -343,7 +363,7 @@ def main() -> None:
             spark.table("plan_audit_bands"), on=["band_idx", "band_hash"],
             how="inner",
         ),
-        ["single_exchange", "bucketed_scan"],
+        ["single_exchange", "bucketed_scan", "python_udf_once"],
         out,
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
